@@ -74,6 +74,32 @@ def test_midstream_malformed_resyncs():
     assert sum(r["malformed"] for r in rows) == 1
 
 
+def test_naive_warc_date_is_utc(monkeypatch):
+    """A WARC-Date without Z/offset is UTC, whatever the host's timezone."""
+    import time
+
+    def resp(date):
+        http = b"HTTP/1.1 200 OK\r\n\r\n<html>x</html>"
+        return (
+            b"WARC/1.0\r\nWARC-Type: response\r\n"
+            + b"WARC-Target-URI: http://h.example.org/\r\n"
+            + b"WARC-Date: " + date + b"\r\n"
+            + b"Content-Length: %d\r\n\r\n" % len(http)
+            + http + b"\r\n\r\n"
+        )
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        rows = _parse_warc_bytes(
+            "n.warc", resp(b"2023-03-01T12:00:00") + resp(b"2023-03-01T07:00:00-05:00")
+        )
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert [r["warc_ts"] for r in rows] == [dt.datetime(2023, 3, 1, 12)] * 2
+
+
 def test_multimember_gzip(spark, tmp_path):
     """Real WARC writers gzip one member per record; the reader must handle
     concatenated members."""
@@ -103,6 +129,23 @@ def test_write_read_roundtrip(spark, tmp_path):
     }
     got = {(r.url, r.warc_ts, bytes(r.html)) for r in back.collect()}
     assert got == want
+
+
+def test_write_empty_partitions_report_no_segment(spark, tmp_path):
+    """Stats rows name exactly the segment files written: an empty
+    partition writes no file and reports no row."""
+    import os
+
+    from twittercrawler_spark.sources.warc import write_warc
+
+    src = synthesize_warc(str(tmp_path / "src.warc"), n_records=2, seed=9)
+    pages = warc_pages(read_warc(spark, src)).coalesce(1).repartition(4)
+    out = str(tmp_path / "out")
+    stats = write_warc(pages, out).collect()
+    files = sorted(f for f in os.listdir(out) if f.startswith("seg-"))
+    assert sorted(r.file for r in stats) == files
+    assert len(files) <= 2 and all(r.n_records > 0 for r in stats)
+    assert sum(r.n_records for r in stats) == 2
 
 
 def test_warc_feeds_crawl_end_to_end(spark, tmp_path):

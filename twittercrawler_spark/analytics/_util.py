@@ -93,9 +93,6 @@ def base_hash32(c: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
 
 
-BASE_HASH32_SQL = "CAST('0x' || substr(md5({s}), 1, 8) AS BIGINT)"
-
-
 def py_base_hash32(s: str) -> int:
     """Pure-Python twin of :func:`base_hash32` (== the oracle SQL twin)."""
     import hashlib

@@ -45,6 +45,7 @@ from ..functions.udfs import (
 from ..functions.urls import spark_host_bucket, spark_url_hash64
 from ..session import PAGE_ROW_GROUP_BYTES, page_row_scan
 from ..sources.tables import Warehouse
+from .robots import compile_robots, disallow_gate
 from .scheduler import select_per_host_topk, selected_counts, with_global_sequence
 from .seen import filter_unseen, plan_update, update_bloom_sidecar
 from .simulator import CrawlConfig
@@ -114,7 +115,7 @@ def _with_url_cols(df: DataFrame, num_buckets: int, salt_sub_buckets: int) -> Da
 
     Canonical URLs are machine-made (scheme://netloc/path[?q]), so host and
     path come from JVM-side regexps inside whole-stage codegen — no Python
-    crossing (udf_host stays for raw/edge-case inputs; parity asserted in
+    crossing (parity with the simulator's urls.host_of asserted in
     tests/test_urls.py).
 
     ``host_bucket`` is the SALTED-HOST key of SURVEY §4.3 — hash(host) plus
@@ -236,7 +237,23 @@ def bootstrap(
     wh.write("frontier", seeds_out, 0)
     tm.lap("seed_frontier_write")
 
+    # the committed robots table has ONE shape (frontier.robots
+    # ROBOTS_SCHEMA) whatever the input was, so rounds never inspect it
     robots = spark.read.parquet(robots_path)
+    if "allow" in robots.columns:
+        # rules table (frontier.robots.parse_robots): Allow exceptions
+        # compiled into their Disallow rows
+        robots = compile_robots(robots)
+    else:
+        # legacy disallow table (host, disallow_prefix[, crawl_delay])
+        robots = robots.select(
+            "host",
+            "disallow_prefix",
+            F.array().cast("array<string>").alias("allow_ext"),
+            (F.col("crawl_delay") if "crawl_delay" in robots.columns else F.lit(None))
+            .cast("int")
+            .alias("crawl_delay"),
+        )
     wh.write("robots", robots, 0)
     counts0 = _bucket_counts(wh.read_uncommitted(spark, "frontier", 0))
     tm.lap("robots+frontier_count")
@@ -260,46 +277,24 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
     if pending is None:
         return False
     pending = pending.drop("round")
-    prev = wh.round_info(rnd - 1) or {}
-    prev_m = prev.get("metrics", {})
-    # frontier emptiness comes from the previous commit's manifest (free);
-    # the head() probe only runs when the manifest predates the field
-    if int(prev_m.get("frontier_size", -1)) == 0:
+    prev_m = wh.round_info(rnd - 1)["metrics"]
+    # frontier emptiness comes from the previous commit's manifest (free)
+    if prev_m["frontier_size"] == 0:
         return False
-    if "frontier_size" not in prev_m and pending.head(1) == []:
-        return False
-    seq_start = int(prev_m.get("seq_end", 0))
+    seq_start = int(prev_m["seq_end"])
 
     robots = wh.read_round(spark, "robots", 0).drop("round")
     pages = wh.read_round(spark, "pages_canon", 0).drop("round")
 
-    # robots gate (P6/master-pinning analog). Two table shapes:
-    # * rules table (has an ``allow`` column — produced by
-    #   frontier.robots.parse_robots from raw robots.txt bodies): full
-    #   longest-match precedence via the map-only broadcast fold gate;
-    # * compiled disallow table (host, disallow_prefix[, crawl_delay]):
-    #   drop candidates whose path starts with any disallowed prefix for
-    #   the host (broadcast anti-join) — exact when no Allow exceptions
-    #   exist (frontier.robots.compile_robots reports conflicts).
-    if "allow" in robots.columns:
-        from .robots import robots_gate
-
-        gated = robots_gate(pending, robots)
-    else:
-        c, rb = pending.alias("c"), F.broadcast(robots).alias("rb")
-        gated = c.join(
-            rb,
-            (F.col("c.host") == F.col("rb.host"))
-            & F.col("c.path").startswith(F.col("rb.disallow_prefix")),
-            "left_anti",
-        )
-    gated = gated.localCheckpoint(eager=False)
+    # robots gate (P6/master-pinning analog): one broadcast anti-join over
+    # the table bootstrap compiled (frontier.robots.disallow_gate)
+    gated = disallow_gate(pending, robots).localCheckpoint(eager=False)
 
     # politeness selection + deterministic global fetch order; robots
     # crawl-delay (when enabled) tightens per-host budgets below the flat
     # quota via a dimension-sized broadcast (quota = floor(round_s/delay))
     quotas = None
-    if cfg.round_seconds > 0 and "crawl_delay" in robots.columns:
+    if cfg.round_seconds > 0:
         quotas = (
             robots.filter(F.col("crawl_delay") > 0)
             .groupBy("host")
@@ -547,15 +542,11 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
         # (also the sidecar planner's n_new — the seen rows ARE the schedule
         # slice); frontier_next/new_links = ONE hash-agg job whose scan is
         # column-pruned to two integer columns of the table just written.
-        prev_rows = wh.read_rows("metrics", rnd - 1)
-        if prev_rows is not None:
-            cand_counts = {
-                int(r["host_bucket"]): int(r["n"])
-                for r in prev_rows
-                if r["stage"] == "frontier_next"
-            }
-        else:  # pre-lineage warehouse resume: count the pending frontier directly
-            cand_counts = _bucket_counts(pending)
+        cand_counts = {
+            int(r["host_bucket"]): int(r["n"])
+            for r in wh.read_rows("metrics", rnd - 1)
+            if r["stage"] == "frontier_next"
+        }
         frontier_written = wh.read_uncommitted(
             spark, "frontier", rnd, frontier_next.schema
         )

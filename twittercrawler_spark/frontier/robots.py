@@ -1,16 +1,18 @@
-"""robots.txt parsing: raw fetched bodies → the engine's robots rules table.
+"""robots.txt: raw fetched bodies → rules table → the crawl's one robots gate.
 
-The crawl previously consumed a pre-built (host, disallow_prefix,
-crawl_delay) dimension (frontier/crawl.py robots gate); a real crawl has to
-derive that table from fetched robots.txt text. This module does the
-derivation — user-agent section selection, allow/disallow rule collection,
-crawl-delay — and supplies the longest-match precedence gate for rule sets
-that contain Allow exceptions.
+:func:`parse_robots` derives a rules table (RULES_SCHEMA: one row per
+Allow/Disallow rule, plus crawl-delay) from fetched robots.txt text.
+:func:`compile_robots` turns it, once at bootstrap, into the committed
+robots table (ROBOTS_SCHEMA) that every round gates with
+:func:`disallow_gate`: a broadcast anti-join where each Disallow prefix
+carries the Allow prefixes that extend it. Legacy disallow tables (host,
+disallow_prefix[, crawl_delay]) are committed in the same shape with no
+Allow exceptions (frontier/crawl.py bootstrap).
 
 One normative spec, two implementations (the crawl module's own pattern):
-:func:`rules_allow` is the pure-Python twin of the DataFrame gate in
-:func:`robots_gate`; parity tests assert they agree on generated
-rule/path matrices including precedence conflicts.
+:func:`rules_allow` is the pure-Python twin of :func:`robots_gate`
+(compile + gate); parity tests assert they agree on generated rule/path
+matrices including precedence conflicts.
 
 Semantics (REP, RFC 9309 + the de-facto Google spec — public knowledge):
 * lines are ``field: value`` with ``#`` comments; fields case-insensitive;
@@ -26,9 +28,8 @@ Semantics (REP, RFC 9309 + the de-facto Google spec — public knowledge):
   seam, not silent data loss.
 
 Scale: robots bodies are a per-host dimension (one row per host). Parsing is
-one Arrow-batched crossing (mapInPandas), the output rules table is
-dimension-sized and broadcast by every consumer — the same shape the gate
-already used.
+one Arrow-batched crossing (mapInPandas); the compiled table is
+dimension-sized and broadcast, so the frontier never shuffles for the gate.
 
 Reference analog (master-exclusion pinning, P6):
 pages/Postprocess_scripts/Stance_Detection.py:57-61.
@@ -38,11 +39,17 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 RULES_SCHEMA = (
     "host string, prefix string, allow boolean, crawl_delay int"
+)
+
+# the committed robots table: one shape whatever the input was
+ROBOTS_SCHEMA = (
+    "host string, disallow_prefix string, allow_ext array<string>, "
+    "crawl_delay int"
 )
 
 DEFAULT_AGENT = "twittercrawler-spark"
@@ -147,89 +154,81 @@ def parse_robots(bodies: DataFrame, agent: str = DEFAULT_AGENT) -> DataFrame:
     return bodies.select("host", "body").mapInPandas(_parse, RULES_SCHEMA)
 
 
-def compile_robots(rules: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split a rules table for the crawl's consumers.
+def compile_robots(rules: DataFrame) -> DataFrame:
+    """Rules table (RULES_SCHEMA) → the committed robots table
+    (ROBOTS_SCHEMA) that :func:`disallow_gate` consumes.
 
-    Returns ``(disallow_table, conflicts)``:
-
-    * ``disallow_table`` — (host, disallow_prefix, crawl_delay), the shape
-      frontier/crawl.py's anti-join gate and crawl-delay quota path consume.
-      EXACT precedence-equivalent iff ``conflicts`` is empty.
-    * ``conflicts`` — (host, allow_prefix, disallow_prefix) pairs where an
-      Allow rule extends a Disallow prefix: such exceptions cannot be
-      expressed as a pure disallow-prefix set; feed the FULL rules table to
-      the precedence gate (run_round does this when the robots table has an
-      ``allow`` column) instead of the compiled one.
+    Each Disallow row carries ``allow_ext``: the host's Allow prefixes that
+    extend it (an Allow equal to the Disallow included — Allow wins ties).
+    Every row of a host carries the host's max crawl-delay; a host with a
+    positive delay but no Disallow rule keeps one NULL-prefix row so the
+    politeness quota still sees it. Rules with an empty prefix carry no
+    restriction (the parser emits them for delay-only groups).
     """
-    dis = rules.filter(~F.col("allow") & (F.col("prefix") != "")).select(
-        "host",
-        F.col("prefix").alias("disallow_prefix"),
-        F.coalesce("crawl_delay", F.lit(0)).alias("crawl_delay"),
+    # one shuffle: each host's rules collect into one dimension-sized row,
+    # and its Disallow prefixes explode from it (explode_outer keeps a host
+    # with none as the NULL-prefix row)
+    per_host = rules.groupBy("host").agg(
+        F.collect_set(
+            F.when(F.col("prefix") != "", F.struct("prefix", "allow"))
+        ).alias("_r"),
+        F.max("crawl_delay").cast("int").alias("crawl_delay"),
     )
-    al = rules.filter(F.col("allow") & (F.col("prefix") != "")).select(
-        "host", F.col("prefix").alias("allow_prefix")
+
+    def prefixes(keep) -> Column:
+        return F.transform(F.filter("_r", keep), lambda r: r["prefix"])
+
+    return (
+        per_host.withColumn(
+            "disallow_prefix", F.explode_outer(prefixes(lambda r: ~r["allow"]))
+        )
+        .filter(F.col("disallow_prefix").isNotNull() | (F.col("crawl_delay") > 0))
+        .select(
+            "host",
+            "disallow_prefix",
+            F.array_sort(
+                prefixes(
+                    lambda r: r["allow"]
+                    & r["prefix"].startswith(F.col("disallow_prefix"))
+                )
+            ).alias("allow_ext"),
+            "crawl_delay",
+        )
     )
-    conflicts = dis.join(al, "host").filter(
-        F.col("allow_prefix").startswith(F.col("disallow_prefix"))
-    ).select("host", "allow_prefix", "disallow_prefix")
-    # hosts with a delay but no disallow rules still need a quota row
-    delay_only = (
-        rules.filter(F.coalesce("crawl_delay", F.lit(0)) > 0)
-        .join(dis.select("host").distinct(), "host", "left_anti")
-        .groupBy("host")
-        .agg(F.max("crawl_delay").alias("crawl_delay"))
-        .select("host", F.lit(None).cast("string").alias("disallow_prefix"),
-                "crawl_delay")
+
+
+def disallow_gate(candidates: DataFrame, robots: DataFrame) -> DataFrame:
+    """The ``candidates`` rows (host, path, …) that ``robots``
+    (ROBOTS_SCHEMA) allows: a broadcast left_anti join that drops a path
+    when some Disallow prefix of its host matches and none of that row's
+    Allow extensions does.
+
+    This is longest-match precedence with Allow winning ties: an Allow that
+    overrides a matching Disallow on a path is at least as long and also a
+    prefix of that path, so it extends the Disallow. NULL-prefix rows never
+    match (``startswith(NULL)`` is NULL); an empty prefix gates the host.
+    """
+    c, rb = candidates.alias("c"), F.broadcast(robots).alias("rb")
+    path = F.col("c.path")
+    return c.join(
+        rb,
+        (F.col("c.host") == F.col("rb.host"))
+        & path.startswith(F.col("rb.disallow_prefix"))
+        & ~F.exists("rb.allow_ext", lambda a: path.startswith(a)),
+        "left_anti",
     )
-    return dis.unionByName(delay_only), conflicts
 
 
 def robots_gate(candidates: DataFrame, rules: DataFrame) -> DataFrame:
-    """Longest-match precedence gate: the ``candidates`` rows ALLOWED under
-    ``rules`` (RULES_SCHEMA). ``candidates`` needs (host, path) columns.
-
-    Plan shape — MAP-ONLY over the candidates: rules pre-aggregate to one
-    array of (prefix, allow) structs per host (dimension-sized, broadcast,
-    the same budget the disallow anti-join gate already assumes), the
-    candidates broadcast-join on host, and the per-path argmax — longest
-    rule wins, Allow wins length ties, no match ⇒ allowed — is a JVM
-    higher-order fold over that array. The frontier never shuffles for the
-    gate at any scale.
-    """
-    host_rules = (
-        rules.filter(F.col("prefix") != "")
-        .groupBy("host")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("prefix"), F.col("allow").cast("int").alias("a"))
-            ).alias("_rl")
-        )
-    )
-    c = candidates.join(F.broadcast(host_rules), "host", "left")
-    matched = F.filter(
-        F.col("_rl"), lambda r: F.col("path").startswith(r["prefix"])
-    )
-    init = F.struct(F.lit(-1).alias("l"), F.lit(1).alias("a"))
-    best = F.aggregate(
-        matched,
-        init,
-        lambda acc, r: F.when(
-            (F.length(r["prefix"]) > acc["l"])
-            | ((F.length(r["prefix"]) == acc["l"]) & (r["a"] > acc["a"])),
-            F.struct(F.length(r["prefix"]).alias("l"), r["a"].alias("a")),
-        ).otherwise(acc),
-    )
-    return (
-        c.withColumn("_b", F.when(F.col("_rl").isNull(), init).otherwise(best))
-        .filter(F.col("_b.a") == 1)
-        .drop("_rl", "_b")
-    )
+    """The ``candidates`` rows (host, path, …) allowed under ``rules``
+    (RULES_SCHEMA): :func:`compile_robots` then :func:`disallow_gate`."""
+    return disallow_gate(candidates, compile_robots(rules))
 
 
 def rules_allow(
     rules: list[tuple[str, str, bool]], host: str, path: str
 ) -> bool:
-    """Pure-Python precedence twin of :func:`robots_gate`:
+    """Pure-Python longest-match twin of :func:`robots_gate`:
     True iff (host, path) is allowed under [(host, prefix, allow)]."""
     best: tuple[int, int] | None = None
     for rh, prefix, allow in rules:

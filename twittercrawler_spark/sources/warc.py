@@ -117,15 +117,13 @@ def _parse_warc_bytes(name: str, raw: bytes) -> list[dict]:
         url = headers.get("warc-target-uri")
         ts_raw = headers.get("warc-date")
         try:
-            ts = (
-                dt.datetime.fromisoformat(ts_raw.replace("Z", "+00:00"))
-                .astimezone(dt.timezone.utc)
-                .replace(tzinfo=None)
-                if ts_raw
-                else None
-            )
+            ts = dt.datetime.fromisoformat(ts_raw) if ts_raw else None
         except ValueError:
             ts = None
+        if ts is not None and ts.tzinfo is not None:
+            # WARC-Date is UTC (ISO-28500); a naive value is read as UTC
+            # too, never as the executor's local time
+            ts = ts.astimezone(dt.timezone.utc).replace(tzinfo=None)
         if not url or ts is None:
             rows.append(_bad(name, "response missing WARC-Target-URI/-Date"))
             continue
@@ -217,7 +215,8 @@ def write_warc(
     Scale shape: map-only — each task streams its partition into one
     segment file named by partition id (deterministic for a deterministic
     partitioning), no shuffle, no driver collection. Returns the per-segment
-    stats frame ((file, n_records)) materialized by the write action.
+    stats frame ((file, n_records)), one row per segment file written,
+    materialized by the write action.
     """
     import pandas as pd
 
@@ -249,7 +248,7 @@ def write_warc(
                 )
                 buf.write(head + http + _CRLF2)
                 n += 1
-        if n > 0:
+        if n > 0:  # an empty partition writes no segment and reports none
             data = buf.getvalue()
             if gzipped:
                 data = gzip.compress(data, 6)
@@ -257,7 +256,7 @@ def write_warc(
             with open(tmp, "wb") as f:
                 f.write(data)
             os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n_records": [n]})
+            yield pd.DataFrame({"file": [name], "n_records": [n]})
 
     return pages.select("url", "warc_ts", "html").mapInPandas(
         _write, "file string, n_records long"
