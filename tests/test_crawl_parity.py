@@ -6,6 +6,8 @@ Asserts the three reference contracts (SURVEY.md §5.1 / BASELINE.json):
   (c) byte-identical extracted text per url.
 """
 
+import math
+
 import duckdb
 import pytest
 
@@ -95,6 +97,19 @@ def test_frontier_progresses(crawl_outputs):
     info = {r: wh.round_info(r)["metrics"] for r in wh.committed_rounds() if r > 0}
     assert sum(m["fetched"] for m in info.values()) == len(sim.fetch_log)
     assert any(m.get("new_links", 0) > 0 for m in info.values())
+    # every commit carries its per-stage wall times as data
+    round_keys = {"schedule", "fetch", "expand", "seen", "tail"}
+    assert all(set(m["stage_s"]) == round_keys for m in info.values())
+    boot = wh.round_info(0)["metrics"]["stage_s"]
+    assert {
+        "canonicalize+cluster+write", "dup_probe", "seed_frontier_write",
+        "robots+frontier_count",
+    } <= set(boot) <= {
+        "canonicalize+cluster+write", "dup_probe", "dedup_rewrite",
+        "seed_frontier_write", "robots+frontier_count",
+    }
+    for sec in [*boot.values(), *(v for m in info.values() for v in m["stage_s"].values())]:
+        assert isinstance(sec, float) and math.isfinite(sec) and sec >= 0
 
 
 def test_robots_gating(crawl_outputs, corpus_dir):

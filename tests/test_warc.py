@@ -115,14 +115,24 @@ def test_multimember_gzip(spark, tmp_path):
 
 
 def test_write_read_roundtrip(spark, tmp_path):
-    """write_warc → read_warc is byte-exact on (url, warc_ts, html)."""
+    """write_warc → read_warc is byte-exact on (url, warc_ts, html),
+    sub-second WARC-Dates included."""
     from twittercrawler_spark.sources.warc import write_warc
 
     src = synthesize_warc(str(tmp_path / "src.warc"), n_records=9, seed=8)
-    pages = warc_pages(read_warc(spark, src)).repartition(3)
+    frac = spark.createDataFrame(
+        [("http://site9.example.org/frac", dt.datetime(2023, 3, 1, 0, 0, 1, 250000),
+          bytearray(b"<html><body>frac</body></html>"))],
+        "url string, warc_ts timestamp, html binary",
+    )
+    pages = (
+        warc_pages(read_warc(spark, src))
+        .unionByName(frac, allowMissingColumns=True)
+        .repartition(3)
+    )
     out = str(tmp_path / "out")
     stats = write_warc(pages, out).collect()
-    assert sum(r.n_records for r in stats) == 9
+    assert sum(r.n_records for r in stats) == 10
     back = warc_pages(read_warc(spark, f"{out}/seg-*"))
     want = {
         (r.url, r.warc_ts, bytes(r.html)) for r in pages.collect()
@@ -186,3 +196,21 @@ def test_warc_feeds_crawl_end_to_end(spark, tmp_path):
     }
     for url, text in got.items():
         assert text == extract_text(raw[url]), url
+
+
+def test_warc_ingest_fixture_is_per_user_and_whole(spark, tmp_path, monkeypatch):
+    """The driver query's WARC fixture lands in a per-user directory, and
+    each segment appears under its final name only once complete."""
+    import getpass
+    import os
+    import tempfile
+
+    from twittercrawler_spark.analytics.crawl_queries import warc_ingest
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = warc_ingest(spark, "unused").collect()
+    root = tmp_path / f"tcspark_warc_v1_{getpass.getuser()}"
+    assert sorted(os.listdir(root)) == [
+        "_done", "seg-00000.warc", "seg-00001.warc.gz", "seg-00002.warc",
+    ]
+    assert sum(r.rec_type == "response" and not r.malformed for r in rows) == 60

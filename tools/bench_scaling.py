@@ -25,7 +25,9 @@ excluded and a crashed trial can't poison the run; plain-python fallback
 via --no-submit); trials alternate across levels
 (noisy-neighbor drift hits all levels equally) and each level takes its
 minimum. An isolated scan→extract
-measurement separates the compute path from the fixed per-round floor.
+measurement separates the compute path from the fixed per-round floor. The
+per-stage decomposition (BENCH/STAGES.md) is read from each metered trial's
+commit manifest (`stage_s`), min over the level's trials.
 
 Writes BENCH/BASELINE.md and prints a JSON summary.
 """
@@ -134,45 +136,6 @@ def _host_chunk(text: str) -> int:
     return n
 
 
-def capture_stage_timings(cores: int, wh_base: str, cfg, trials: int = 2) -> dict:
-    """Per-stage wall clock of the metered round via SPARK_GRAFT_TIMING=1
-    (frontier/crawl._StageTimer prints), min per stage across trials."""
-    import contextlib
-    import io
-    import re as _re
-
-    from twittercrawler_spark.frontier.crawl import run_round
-    from twittercrawler_spark.sources.tables import Warehouse
-
-    os.environ["SPARK_GRAFT_TIMING"] = "1"
-    stages: dict[str, float] = {}
-    try:
-        spark = _session(cores)
-        for _ in range(trials):
-            trial = tempfile.mkdtemp(prefix=f"scale_stage_{cores}_")
-            shutil.rmtree(trial)
-            shutil.copytree(wh_base, trial)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                run_round(spark, Warehouse(trial), cfg, 1)
-            shutil.rmtree(trial, ignore_errors=True)
-            # both timing trials share ONE JVM (unlike the one-round-per-
-            # process metered trials): nudge the driver GC so trial 1's
-            # weak-ref-cleaned state (localCheckpoint blocks, broadcasts)
-            # is actually freed before trial 2's page-row scans allocate —
-            # observed OOM at local[32] on the 600k corpus without this
-            spark._jvm.System.gc()
-            for m in _re.finditer(
-                r"\[timing round 1\] ([^:]+): ([0-9.]+)s", buf.getvalue()
-            ):
-                st, sec = m.group(1), float(m.group(2))
-                stages[st] = min(stages.get(st, float("inf")), sec)
-        spark.stop()
-    finally:
-        os.environ.pop("SPARK_GRAFT_TIMING", None)
-    return stages
-
-
 def _cfg():
     import bench
     from twittercrawler_spark.frontier.simulator import CrawlConfig
@@ -186,34 +149,22 @@ def _write_json(path: str, obj: dict) -> None:
 
 
 def _step_bootstrap(wh_base: str, corpus: str, out: str) -> None:
-    import contextlib
-    import io
-    import re as _re
-
     from twittercrawler_spark.frontier.crawl import bootstrap
     from twittercrawler_spark.sources.tables import Warehouse
 
     shutil.rmtree(wh_base, ignore_errors=True)  # a crashed bootstrap's partial state
     spark = _session(8)
-    os.environ["SPARK_GRAFT_TIMING"] = "1"
-    buf = io.StringIO()
+    wh = Warehouse(wh_base)
     t0 = time.time()
-    try:
-        with contextlib.redirect_stdout(buf):
-            bootstrap(
-                spark,
-                Warehouse(wh_base),
-                f"{corpus}/pages.parquet",
-                f"{corpus}/seeds_all.parquet",
-                f"{corpus}/robots.parquet",
-                _cfg(),
-            )
-    finally:
-        os.environ.pop("SPARK_GRAFT_TIMING", None)
-    stages = {
-        m.group(1): float(m.group(2))
-        for m in _re.finditer(r"\[timing bootstrap\] ([^:]+): ([0-9.]+)s", buf.getvalue())
-    }
+    bootstrap(
+        spark,
+        wh,
+        f"{corpus}/pages.parquet",
+        f"{corpus}/seeds_all.parquet",
+        f"{corpus}/robots.parquet",
+        _cfg(),
+    )
+    stages = wh.round_info(0)["metrics"]["stage_s"]
     _write_json(out, {"bootstrap_sec": time.time() - t0, "stages": stages})
     spark.stop()
 
@@ -239,18 +190,18 @@ def _step_trial(cores: int, wh_base: str, out: str) -> None:
     with bench.HostNoise() as hn:
         run_round(spark, wh, _cfg(), 1)
     dt = time.time() - t0
-    fetched = int(wh.round_info(1)["metrics"]["fetched"])
+    m = wh.round_info(1)["metrics"]
     shutil.rmtree(trial, ignore_errors=True)
-    _write_json(out, {"sec": dt, "fetched": fetched, "noise": hn.steal_pct + hn.sys_pct})
+    _write_json(out, {
+        "sec": dt, "fetched": int(m["fetched"]), "stages": m["stage_s"],
+        "noise": hn.steal_pct + hn.sys_pct,
+    })
     spark.stop()
 
 
 _STEPS = {
     "bootstrap": lambda a: _step_bootstrap(a["wh"], a["corpus"], a["out"]),
     "trial": lambda a: _step_trial(int(a["cores"]), a["wh"], a["out"]),
-    "stages": lambda a: _write_json(
-        a["out"], capture_stage_timings(int(a["cores"]), a["wh"], _cfg())
-    ),
     "extract": lambda a: _write_json(
         a["out"], {"sec": measure_extract_stage(a["corpus"], int(a["cores"]))}
     ),
@@ -291,7 +242,7 @@ def main() -> None:
     # deterministic scratch: a crashed/killed run resumes from its completed
     # steps instead of re-paying bootstrap + every earlier metered trial
     # (delete the dir for a fully fresh measurement)
-    scratch = os.path.join(tempfile.gettempdir(), "scale_steps_v1")
+    scratch = os.path.join(tempfile.gettempdir(), "scale_steps_v2")
     os.makedirs(scratch, exist_ok=True)
     wh_base = os.path.join(scratch, "wh_base")
 
@@ -342,33 +293,26 @@ def main() -> None:
         os.unlink(os.path.join(scratch, "bootstrap.json"))  # stale marker
     boot = run_step("bootstrap", "bootstrap", wh=wh_base, corpus=corpus)
     t_bootstrap = boot["bootstrap_sec"]
-    boot_stages = boot.get("stages", {})
+    boot_stages = boot["stages"]
 
     times: dict[int, list[float]] = {c: [] for c in LEVELS}
     noise: dict[int, list[float]] = {c: [] for c in LEVELS}
+    stages: dict[int, list[dict[str, float]]] = {c: [] for c in LEVELS}
     fetched = None
     for cycle in range(CYCLES):
         for cores in LEVELS:
             r = run_step("trial", f"trial_{cores}_{cycle}", cores=cores, wh=wh_base)
             times[cores].append(r["sec"])
             noise[cores].append(r["noise"])
+            stages[cores].append(r["stages"])
             assert fetched is None or fetched == r["fetched"], "nondeterministic round"
             fetched = r["fetched"]
 
-    # per-stage decomposition of the spec'd 8→32 step (written to STAGES.md).
-    # Supporting evidence, not the headline: a crashed stages child (e.g. an
-    # OOM in a bad host window) degrades to an empty decomposition instead
-    # of losing the whole run's metered trials.
-    def _try_step(step: str, key: str, **kw) -> dict:
-        try:
-            return run_step(step, key, **kw)
-        except subprocess.CalledProcessError as e:
-            print(f"WARN: step {key} failed ({e}); continuing without it",
-                  file=sys.stderr)
-            return {}
-
-    stages_8 = _try_step("stages", "stages_8", cores=8, wh=wh_base)
-    stages_32 = _try_step("stages", "stages_32", cores=32, wh=wh_base)
+    # per-stage decomposition of the spec'd 8→32 step (written to STAGES.md):
+    # each stage's minimum over the level's metered trials
+    stages_8, stages_32 = (
+        {st: min(t[st] for t in stages[c]) for st in stages[c][0]} for c in (8, 32)
+    )
 
     # compute-path isolation at both steps
     ex_2 = run_step("extract", "extract_2", cores=2, corpus=corpus)["sec"]
@@ -426,12 +370,10 @@ def main() -> None:
     }
 
     # STAGES.md: the 8→32 decomposition against the same-run host ceiling
-    overlapped = {"seen+sidecar", "join_seen_sidecar"}
+    overlapped = {"seen"}
     stage_rows = []
-    for st in stages_8:
-        t8, t32 = stages_8[st], stages_32.get(st)
-        if t32 is None:
-            continue
+    for st, t8 in stages_8.items():
+        t32 = stages_32[st]
         eff = (t8 / t32) / 4 if t32 > 0 else float("nan")
         stage_rows.append((st, t8, t32, eff))
     reject_banner = (
@@ -454,20 +396,20 @@ def main() -> None:
         f_out.write(
             "# Crawl round — per-stage 8→32 decomposition (same run as "
             "BENCH/BASELINE.md)\n\n"
-            "Measured with `SPARK_GRAFT_TIMING=1` on the scaling corpus, min of "
-            "2 trials per level. Stages marked *(overlapped)* run on a "
+            "Stage wall times on the scaling corpus, read from each metered "
+            "trial's commit manifest (`stage_s`), min over the level's "
+            f"{CYCLES} trials. Stages marked *(overlapped)* run on a "
             "concurrent driver thread DURING the fetch stage: their span is "
             "wall time INCLUDING queueing behind fetch for task slots, so it "
             "tracks the fetch stage's duration and does not add to the round "
-            "wall clock (round total ≈ schedule + fetch + expand + metrics).\n\n"
+            "wall clock (round total ≈ schedule + fetch + expand + tail).\n\n"
             "| stage | local[8] s | local[32] s | 8→32 efficiency |\n|---|---|---|---|\n"
         )
         for st, t8, t32, eff in stage_rows:
             mark = " *(overlapped)*" if st in overlapped else ""
             f_out.write(f"| {st}{mark} | {t8:.2f} | {t32:.2f} | {eff:.3f} |\n")
-        if boot_stages:
-            f_out.write(
-                f"""
+        f_out.write(
+            f"""
 ## Bootstrap decomposition (one-time, unmetered; local[8], this run)
 
 Total {t_bootstrap:.1f} s. The dominant stage is the full-corpus
@@ -482,9 +424,9 @@ and only a corpus WITH collisions pays a recompute+rewrite.
 | bootstrap stage | s |
 |---|---|
 """
-            )
-            for st, sec in boot_stages.items():
-                f_out.write(f"| {st} | {sec:.2f} |\n")
+        )
+        for st, sec in boot_stages.items():
+            f_out.write(f"| {st} | {sec:.2f} |\n")
         f_out.write(
             f"""
 ## The 8→32 step against the box's own capacity, measured in this run

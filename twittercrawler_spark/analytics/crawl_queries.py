@@ -15,6 +15,7 @@ invocations reuse the committed warehouse.
 
 from __future__ import annotations
 
+import getpass
 import os
 import tempfile
 
@@ -98,19 +99,20 @@ def warc_ingest(spark: SparkSession, sf: str) -> DataFrame:
     suite in tests/test_warc.py; no SQL engine reads WARC."""
     from ..sources.warc import read_warc, synthesize_warc
 
-    root = os.path.join(tempfile.gettempdir(), "tcspark_warc_v1")
+    # per-user directory; each segment lands whole (tmp + os.replace)
+    # before the _done marker, so a crashed or concurrent driver never
+    # leaves a partial segment under its final name
+    root = os.path.join(tempfile.gettempdir(), f"tcspark_warc_v1_{getpass.getuser()}")
     done = os.path.join(root, "_done")
     if not os.path.exists(done):
-        synthesize_warc(os.path.join(root, "seg-00000.warc"), n_records=25, seed=42)
-        synthesize_warc(
-            os.path.join(root, "seg-00001.warc.gz"), n_records=25, seed=43
-        )
-        synthesize_warc(
-            os.path.join(root, "seg-00002.warc"),
-            n_records=10,
-            seed=44,
-            truncated_tail=True,
-        )
+        for name, kw in (
+            ("seg-00000.warc", {"n_records": 25, "seed": 42}),
+            ("seg-00001.warc.gz", {"n_records": 25, "seed": 43}),
+            ("seg-00002.warc", {"n_records": 10, "seed": 44, "truncated_tail": True}),
+        ):
+            tmp = os.path.join(root, f".{os.getpid()}-{name}")
+            synthesize_warc(tmp, **kw)
+            os.replace(tmp, os.path.join(root, name))
         with open(done, "w") as f:
             f.write("ok")
     rec = read_warc(spark, os.path.join(root, "seg-*"))

@@ -87,13 +87,18 @@ hs AS (SELECT doc_id, s, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h FROM 
 # set — the same rows dedup_minhash_lsh already checkpointed per query), so
 # holding it for the session costs what one family member's checkpoint cost
 # before, and at corpus scale it is exactly the signals table a production
-# pipeline would materialize to storage once per corpus snapshot.
+# pipeline would materialize to storage once per corpus snapshot. Entries
+# of any other (stopped) application are dropped on access, so a long-lived
+# process holds one application's signals at most.
 _SIGNALS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def dedup_signals(spark: SparkSession, sf: str) -> DataFrame:
     """(doc_id, ss, m1..mK, f_lo, f_hi) — all dedup signals in one pass."""
-    key = (spark.sparkContext.applicationId, sf)
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _SIGNALS_CACHE if k[0] != app]:
+        del _SIGNALS_CACHE[stale]
+    key = (app, sf)
     cached = _SIGNALS_CACHE.get(key)
     if cached is not None:
         return cached

@@ -28,15 +28,19 @@ Scale notes (100 TB / 10^10-URL design intent, tested at local scale):
     (no iterative lineage blowup);
   * per-partition lineage: per-host_bucket row counts for every stage are
     recorded in the metrics table and the commit manifest.
+  * per-stage wall time: every commit manifest carries ``stage_s``, the
+    seconds of each named stage (round: schedule/fetch/expand/seen/tail).
 """
 
 from __future__ import annotations
 
-import os
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import wait as _fut_wait
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.udfs import (
     udf_canonicalize,
@@ -50,25 +54,12 @@ from .scheduler import select_per_host_topk, selected_counts, with_global_sequen
 from .seen import filter_unseen, plan_update, update_bloom_sidecar
 from .simulator import CrawlConfig
 
-class _StageTimer:
-    """Opt-in per-stage wall-clock trace (SPARK_GRAFT_TIMING=1): prints the
-    time between materialization points of a round — the tool behind the
-    scaling-evidence breakdown in BENCH/BASELINE.md."""
 
-    def __init__(self, label: str):
-        self.on = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-        self.label = label
-        self.t = time.time()
-
-    def lap(self, stage: str) -> None:
-        if self.on:
-            now = time.time()
-            print(f"[timing {self.label}] {stage}: {now - self.t:.2f}s", flush=True)
-            self.t = now
-
-    def note(self, stage: str, sec: float) -> None:
-        if self.on:
-            print(f"[timing {self.label}] {stage}: {sec:.2f}s (overlapped)", flush=True)
+def _lap(stage_s: dict[str, float], stage: str, t0: float) -> float:
+    """Record ``stage``'s wall time since ``t0`` in ``stage_s``; returns now."""
+    now = time.perf_counter()
+    stage_s[stage] = round(now - t0, 4)
+    return now
 
 
 _PATH_RE = r"^[a-z0-9+.-]+://[^/]+(/[^?]*)"
@@ -144,7 +135,8 @@ def bootstrap(
     cfg: CrawlConfig,
 ) -> None:
     """Round 0: canonicalized page corpus + seeded frontier + robots dim."""
-    tm = _StageTimer("bootstrap")
+    stage_s: dict[str, float] = {}
+    t = time.perf_counter()
     raw = spark.read.parquet(pages_path)
     # Canonicalize join keys only; html stays opaque — extraction runs in the
     # per-round fetch path for SELECTED urls only (at 10^10-page scale you
@@ -174,7 +166,7 @@ def bootstrap(
     with page_row_scan(spark):
         wh.write("pages_canon", _clustered(canon), 0,
                  row_group_bytes=PAGE_ROW_GROUP_BYTES)
-    tm.lap("canonicalize+cluster+write")
+    t = _lap(stage_s, "canonicalize+cluster+write", t)
     dup_urls = (
         wh.read_uncommitted(spark, "pages_canon", 0)
         .groupBy("url")
@@ -183,7 +175,7 @@ def bootstrap(
         .select("url")
     )
     n_dup = dup_urls.limit(_DUP_BROADCAST_LIMIT + 1).count()
-    tm.lap("dup_probe")
+    t = _lap(stage_s, "dup_probe", t)
     if n_dup > 0:
         # Collisions exist (adversarial/messy corpus): dedup — keep the
         # earliest (warc_ts, url_raw), a computed rule, not task order — by
@@ -216,7 +208,7 @@ def bootstrap(
         with page_row_scan(spark):
             wh.write("pages_canon", _clustered(canon), 0,
                      row_group_bytes=PAGE_ROW_GROUP_BYTES)
-        tm.lap("dedup_rewrite")
+        t = _lap(stage_s, "dedup_rewrite", t)
 
     seeds = (
         spark.read.parquet(seeds_path)
@@ -235,7 +227,7 @@ def bootstrap(
     # job rescans only the two integer columns of the table just written;
     # the metadata-scale metrics table is written driver-side (no job).
     wh.write("frontier", seeds_out, 0)
-    tm.lap("seed_frontier_write")
+    t = _lap(stage_s, "seed_frontier_write", t)
 
     # the committed robots table has ONE shape (frontier.robots
     # ROBOTS_SCHEMA) whatever the input was, so rounds never inspect it
@@ -256,7 +248,7 @@ def bootstrap(
         )
     wh.write("robots", robots, 0)
     counts0 = _bucket_counts(wh.read_uncommitted(spark, "frontier", 0))
-    tm.lap("robots+frontier_count")
+    _lap(stage_s, "robots+frontier_count", t)
     wh.write_rows(
         "metrics",
         0,
@@ -267,25 +259,17 @@ def bootstrap(
         _metrics_schema(),
     )
     n_seeds = sum(counts0.values())
-    wh.commit(0, {"seq_end": 0, "frontier_size": n_seeds, "cfg": cfg.__dict__})
+    wh.commit(
+        0,
+        {"seq_end": 0, "frontier_size": n_seeds, "cfg": cfg.__dict__, "stage_s": stage_s},
+    )
 
 
-def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) -> bool:
-    """Execute round ``rnd``; returns False when the frontier is exhausted."""
-    tm = _StageTimer(f"round {rnd}")
-    pending = wh.read_round(spark, "frontier", rnd - 1)
-    if pending is None:
-        return False
-    pending = pending.drop("round")
-    prev_m = wh.round_info(rnd - 1)["metrics"]
-    # frontier emptiness comes from the previous commit's manifest (free)
-    if prev_m["frontier_size"] == 0:
-        return False
-    seq_start = int(prev_m["seq_end"])
-
-    robots = wh.read_round(spark, "robots", 0).drop("round")
-    pages = wh.read_round(spark, "pages_canon", 0).drop("round")
-
+def _schedule(
+    pending: DataFrame, robots: DataFrame, cfg: CrawlConfig, seq_start: int
+) -> tuple[DataFrame, DataFrame]:
+    """Robots gate + politeness top-k + global fetch sequence: returns the
+    gated frontier and the round's checkpointed schedule slice (``seq``)."""
     # robots gate (P6/master-pinning analog): one broadcast anti-join over
     # the table bootstrap compiled (frontier.robots.disallow_gate)
     gated = disallow_gate(pending, robots).localCheckpoint(eager=False)
@@ -322,11 +306,283 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
     # checkpoint once; ONE count job over the checkpointed narrow rows serves
     # both the Bloom-sidecar capacity planner (n_new per bucket) and the
     # "selected" lineage metrics — the seen rows ARE the schedule slice. That
-    # count runs on the OVERLAPPED thread below (its first consumer is the
+    # count runs on the OVERLAPPED seen stage (its first consumer is the
     # sidecar planner), keeping the main path's serial chain at
     # checkpoint → fetch write → frontier write → frontier count → commit.
-    selected = selected.localCheckpoint(eager=True)
-    tm.lap("schedule")
+    return gated, selected.localCheckpoint(eager=True)
+
+
+def _seen_and_sidecar(
+    spark: SparkSession, wh: Warehouse, rnd: int, selected: DataFrame,
+    seen_prior: DataFrame | None, sidecar_prev: DataFrame | None,
+    prev_meta: dict[int, tuple[int, int]],
+) -> tuple[dict[int, tuple[int, int]], dict[int, int], float]:
+    """Seen-table write + Bloom-sidecar update (the overlapped stage): returns
+    the sidecar's (n_items, cap) per bucket, the schedule slice's per-bucket
+    counts and this stage's own wall time."""
+    t0 = time.perf_counter()
+    sel_counts = _bucket_counts(selected)
+    wh.write("seen", selected.select("url", "url_hash", "host_bucket"), rnd)
+    new_hashes = selected.select("host_bucket", "url_hash")
+    # n_new per bucket == the schedule slice's counts (the seen rows ARE the
+    # selected rows) — reuse the shared sel_counts job; with no prior meta
+    # (round 1) every bucket builds fresh
+    bloom_meta, overflow = plan_update(prev_meta, sel_counts)
+    full = (
+        seen_prior.select("host_bucket", "url_hash").unionByName(new_hashes)
+        if overflow
+        else None
+    )
+    sidecar_next = update_bloom_sidecar(new_hashes, sidecar_prev, overflow, full)
+    wh.write("seen_bloom", sidecar_next, rnd)
+    # authoritative (n_items, cap) counters come from the table just
+    # written — manifest meta and sidecar state share ONE source, so a
+    # future path that introduced duplicate (host_bucket, url_hash) rows
+    # (i.e. a double fetch) trips the invariant check below instead of
+    # silently desynchronizing the overflow planner from the bitsets
+    table_meta = {
+        int(r["host_bucket"]): (int(r["n_items"]), int(r["cap"]))
+        for r in wh.read_uncommitted(spark, "seen_bloom", rnd)
+        .select("host_bucket", "n_items", "cap")
+        .collect()
+    }
+    if table_meta != bloom_meta:
+        raise AssertionError(
+            "bloom_meta planner disagrees with the written sidecar — the "
+            f"seen table holds unexpected duplicate keys? plan={bloom_meta} "
+            f"table={table_meta}"
+        )
+    return table_meta, sel_counts, time.perf_counter() - t0
+
+
+def _fetch(
+    spark: SparkSession, wh: Warehouse, rnd: int, pages: DataFrame, selected: DataFrame
+) -> DataFrame:
+    """Fetch + extract the schedule slice into fetch_log; returns the
+    written table (uncommitted) for link expansion."""
+    # "fetch": ship the SCHEDULE to the DATA — the selected slice is
+    # quota-bounded (politeness) and tiny next to the page corpus, so it
+    # broadcasts against the pages scan and the html bytes NEVER shuffle;
+    # extraction (the only Python crossings, Arrow-batched) then runs
+    # scan-local on the fetched rows only. (At frontier sizes where a round's
+    # schedule outgrew the broadcast budget, dropping the hint falls back to
+    # a bucket-co-located SMJ — same plan shape, still no html re-shuffle
+    # with host_bucket-bucketed storage.)
+    sel_keys = selected.select("url", "seq", "priority", "host", "host_bucket")
+    # coalesce to one task per slot before the extract UDF (same measured
+    # treatment as the link-expansion path): the corpus scan splits at
+    # file/row-group granularity into far more tasks than slots, and every
+    # pandas-UDF task pays a fixed Arrow/worker round-trip; the html rows
+    # stream through each fat task as bounded reader batches, so fewer
+    # tasks costs no memory. Also writes one fetch_log file per slot
+    # (row groups stay 16 MB, so later scans still split below files).
+    # extraction AND link canonicalization run fused in this one Arrow
+    # crossing (udf_extract_text_canon_links): the href strings never
+    # leave Python raw, the canonicalize work rides the parallel fetch
+    # stage instead of its own job on the serial round path, and the
+    # fetch_log's links column durably holds RESOLVED canonical urls
+    # (per-page first-seen dedup; malformed/non-http hrefs dropped).
+    hit = (
+        pages.select("url", "html", "lang")
+        .join(F.broadcast(sel_keys), "url")
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .withColumn(
+            "_ex", udf_extract_text_canon_links(F.col("html"), F.col("url"))
+        )
+        .withColumn("text", F.col("_ex.text"))
+        .withColumn("links", F.col("_ex.links"))
+        .withColumn("status", F.lit("ok"))
+        .drop("html", "_ex")
+    )
+    # miss = scheduled urls absent from the corpus. A direct
+    # left_anti(sel_keys, pages.url) plans as a sort-merge join that
+    # shuffles EVERY page url (the corpus side) — at 10^10 pages that is
+    # the biggest shuffle in the round, moved for a result bounded by the
+    # quota. Route it through the schedule instead: hit_urls = corpus
+    # urls ∩ schedule (broadcast semi-join on the column-pruned url scan,
+    # map-only, reuses the sel_keys broadcast), then anti-join against
+    # THAT — both sides schedule-bounded, so the anti-join broadcasts at
+    # any corpus size and the pages scan never shuffles.
+    hit_urls = pages.select("url").join(
+        F.broadcast(sel_keys.select("url")), "url", "left_semi"
+    )
+    miss = (
+        sel_keys.join(F.broadcast(hit_urls), "url", "left_anti")
+        .withColumn("lang", F.lit(None).cast("string"))
+        .withColumn("text", F.lit(None).cast("string"))
+        .withColumn("links", F.lit(None).cast("array<string>"))
+        .withColumn("status", F.lit("missing"))
+    )
+    fetched = hit.unionByName(miss, allowMissingColumns=False)
+
+    # The fetch_log WRITE is the round's materialization point: extraction
+    # runs exactly once into the durable table; downstream link expansion
+    # re-reads it COLUMN-PRUNED (url, priority, links — the text bytes stay
+    # on disk). Caching these wide rows on-heap instead measurably collapses
+    # under GC at high parallelism. fetch_log keeps the scan-local layout
+    # (no text shuffle); crawl order is the seq COLUMN, never file order
+    # (SURVEY.md §7.4).
+    fetch_out = fetched.select(
+        "seq", "url", "host", "host_bucket", "status", "text", "lang",
+        "priority", "links",
+    )
+    wh.write("fetch_log", fetch_out, rnd, row_group_bytes=PAGE_ROW_GROUP_BYTES)
+    return wh.read_uncommitted(spark, "fetch_log", rnd, fetch_out.schema)
+
+
+def _expand(
+    spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int,
+    fetched_log: DataFrame, gated: DataFrame, selected: DataFrame,
+    seen_prior: DataFrame | None, sidecar_prev: DataFrame | None,
+) -> StructType:
+    """Link expansion + seen probe + frontier merge into the frontier
+    table; returns the written frontier's schema."""
+    # expand: the links column already holds canonical urls (fused into
+    # the fetch stage's extract crossing), so expansion is pure
+    # JVM: column-pruned scan (status, priority, links — the text bytes
+    # stay on disk) → explode → url cols (map-side codegen) → ONE
+    # host_bucket-clustering shuffle that the whole rest of the subtree
+    # rides: the per-url dedup agg groups on (host_bucket, url, …) so
+    # HashPartitioning(host_bucket) already satisfies it, and the
+    # Bloom-probe cogroup in filter_unseen groups on host_bucket too —
+    # neither inserts an exchange of its own. Trade-off (deliberate,
+    # plan-pinned in tests/test_plans.py): with the repartition BELOW the
+    # groupBy, BOTH HashAggregates plan above the exchange, so exploded
+    # per-page duplicate links ride the one shuffle UNCOLLAPSED and are
+    # deduplicated post-shuffle — 1 shuffle of raw exploded links versus
+    # the old url-keyed agg's 4 shuffles of deduped links. On
+    # duplicate-heavy production rounds a hot url's copies all land in
+    # one bucket partition; if that skew ever binds, a map-side
+    # pre-collapse (per-partition dedup on the grouping keys before the
+    # repartition — a mapInPandas/mapPartitions pass, since a DataFrame
+    # partial-distinct cannot be forced without its own shuffle) is the
+    # candidate fix. Benchmark before adopting: the measured r4 A/B that
+    # chose this form compared single-shuffle vs the 4-shuffle url-keyed
+    # agg (12.1 → 10.5 s @8 on the 250k corpus), not vs a pre-collapse,
+    # and the bench corpora (≤4 links/page, few duplicate links) cannot
+    # surface the duplicate-heavy regime where a pre-collapse pays.
+    links = (
+        fetched_log.filter(F.col("status") == "ok")
+        .select(
+            F.explode("links").alias("url"),
+            (F.col("priority") * cfg.priority_decay).alias("child_priority"),
+        )
+    )
+    links = _with_url_cols(links, cfg.num_buckets, cfg.salt_sub_buckets)
+    links = (
+        links.repartition(cfg.num_buckets, "host_bucket")
+        .groupBy("url", "url_hash", "host", "host_bucket", "path")
+        .agg(F.max("child_priority").alias("priority"))
+    )
+
+    # dedup: not fetched this round, not in prior seen (Bloom prefilter +
+    # exact anti-join), not already pending. The sidecar is the committed
+    # per-bucket Bloom TABLE maintained incrementally by the seen stage —
+    # never built by collecting hashes to the driver. filter_unseen flags
+    # the full link rows in the probe crossing itself (definite misses flow
+    # through a filter; only the Bloom-fpp "maybe" sliver shuffles into
+    # the exact anti-join), so the link pipeline is consumed exactly
+    # once — no checkpoint, no semi-join back.
+    links = filter_unseen(spark, links, seen_prior, sidecar_prev)
+    # remaining = gated minus selected, so selected ∪ remaining == gated
+    # EXACTLY: the "not fetched this round" and "not already pending"
+    # anti-joins fold into ONE anti-join against gated's urls. selected
+    # is quota-bounded (politeness) — broadcast it, like the fetch join's
+    # sel_keys, so the frontier-sized gated rows never shuffle on url for
+    # the remaining split (they still shuffle once into the merge's
+    # host_bucket clustering below).
+    remaining = gated.join(F.broadcast(selected.select("url")), "url", "left_anti")
+    links = links.join(gated.select("url"), "url", "left_anti")
+    new_pending = links.withColumn("discovered_round", F.lit(rnd)).select(
+        "url", "url_hash", "host", "host_bucket", "path", "priority", "discovered_round"
+    )
+
+    # the frontier WRITE is the merge's single materialization (same durable-
+    # table-as-checkpoint pattern as fetch_log); new-link rows are recovered
+    # from the written table by discovered_round — no on-heap caching
+    frontier_next = remaining.select(
+        "url", "url_hash", "host", "host_bucket", "path", "priority", "discovered_round"
+    ).unionByName(new_pending)
+    frontier_next = frontier_next.repartition(cfg.num_buckets, "host_bucket")
+    wh.write("frontier", frontier_next, rnd)
+    return frontier_next.schema
+
+
+def _tail(
+    spark: SparkSession, wh: Warehouse, rnd: int, frontier_schema: StructType,
+    seen_fut: Future,
+) -> tuple[dict[int, tuple[int, int]], float, dict[str, int]]:
+    """Frontier count, seen-stage join and the metrics write: returns the
+    sidecar meta, the seen stage's seconds and this round's lineage totals."""
+    # per-partition lineage metrics (north rule): per-host_bucket counts
+    # at each stage of this round. candidates = last round's frontier_next
+    # lineage (metadata-scale driver read — the frontier is never
+    # rescanned just to count it); selected = the shared sel_counts job
+    # (also the sidecar planner's n_new — the seen rows ARE the schedule
+    # slice); frontier_next/new_links = ONE hash-agg job whose scan is
+    # column-pruned to two integer columns of the table just written.
+    cand_counts = {
+        int(r["host_bucket"]): int(r["n"])
+        for r in wh.read_rows("metrics", rnd - 1)
+        if r["stage"] == "frontier_next"
+    }
+    frontier_written = wh.read_uncommitted(spark, "frontier", rnd, frontier_schema)
+    fn_counts, nl_counts = {}, {}
+    for r in (
+        frontier_written.groupBy("host_bucket")
+        .agg(
+            F.count("*").alias("fn"),
+            F.sum(F.when(F.col("discovered_round") == rnd, 1).otherwise(0))
+            .cast("bigint")
+            .alias("nl"),
+        )
+        .collect()
+    ):
+        fn_counts[int(r["host_bucket"])] = int(r["fn"])
+        if int(r["nl"]) > 0:
+            nl_counts[int(r["host_bucket"])] = int(r["nl"])
+    # join the overlapped seen stage (its failure fails the round BEFORE
+    # the commit); it carries the shared sel_counts job plus the
+    # bloom_meta counters that go into the manifest
+    bloom_meta, sel_counts, seen_s = seen_fut.result()
+    collected = [
+        {"host_bucket": b, "stage": stage, "n": n}
+        for stage, counts in (
+            ("candidates", cand_counts),
+            ("selected", sel_counts),
+            ("frontier_next", fn_counts),
+            ("new_links", nl_counts),
+        )
+        for b, n in sorted(counts.items())
+    ]
+    wh.write_rows("metrics", rnd, collected, _metrics_schema())
+    totals = {s: 0 for s in ("candidates", "selected", "new_links", "frontier_next")}
+    for r in collected:
+        totals[r["stage"]] += r["n"]
+    return bloom_meta, seen_s, totals
+
+
+def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) -> bool:
+    """Execute round ``rnd``; returns False when the frontier is exhausted.
+
+    The round is five named stages — schedule, seen (overlapped), fetch,
+    expand, tail — and their wall times commit with it as ``stage_s``.
+    """
+    t = time.perf_counter()
+    pending = wh.read_round(spark, "frontier", rnd - 1)
+    if pending is None:
+        return False
+    prev_m = wh.round_info(rnd - 1)["metrics"]
+    # frontier emptiness comes from the previous commit's manifest (free)
+    if prev_m["frontier_size"] == 0:
+        return False
+    seq_start = int(prev_m["seq_end"])
+    robots = wh.read_round(spark, "robots", 0).drop("round")
+    pages = wh.read_round(spark, "pages_canon", 0).drop("round")
+
+    stage_s: dict[str, float] = {}
+    gated, selected = _schedule(pending.drop("round"), robots, cfg, seq_start)
+    t = _lap(stage_s, "schedule", t)
 
     # The seen-table write and the Bloom-sidecar update depend ONLY on the
     # checkpointed schedule slice plus committed prior state, so they run on
@@ -337,254 +593,28 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
     seen_prior = wh.read(spark, "seen", upto=rnd - 1)
     sidecar_prev = wh.read_round(spark, "seen_bloom", rnd - 1)
     prev_meta = {int(k): tuple(v) for k, v in (prev_m.get("bloom_meta") or {}).items()}
-
-    def _seen_and_sidecar() -> tuple[dict[int, tuple[int, int]], dict[int, int]]:
-        t0 = time.time()
-        sel_counts = _bucket_counts(selected)
-        seen_out = selected.select("url", "url_hash", "host_bucket")
-        wh.write("seen", seen_out, rnd)
-        new_hashes = selected.select("host_bucket", "url_hash")
-        if seen_prior is not None and (sidecar_prev is None or not prev_meta):
-            # resume from a pre-sidecar warehouse (rare): rebuild every
-            # bucket from the full seen set
-            full = seen_prior.select("host_bucket", "url_hash").unionByName(new_hashes)
-            bloom_meta, _ = plan_update({}, _bucket_counts(full))
-            sidecar_next = update_bloom_sidecar(full, None)
-        else:
-            # n_new per bucket == the schedule slice's counts (the seen rows
-            # ARE the selected rows) — reuse the shared sel_counts job
-            bloom_meta, overflow = plan_update(prev_meta, sel_counts)
-            full = (
-                seen_prior.select("host_bucket", "url_hash").unionByName(new_hashes)
-                if overflow
-                else None
-            )
-            sidecar_next = update_bloom_sidecar(new_hashes, sidecar_prev, overflow, full)
-        wh.write("seen_bloom", sidecar_next, rnd)
-        # authoritative (n_items, cap) counters come from the table just
-        # written — manifest meta and sidecar state share ONE source, so a
-        # future path that introduced duplicate (host_bucket, url_hash) rows
-        # (i.e. a double fetch) trips the invariant check below instead of
-        # silently desynchronizing the overflow planner from the bitsets
-        table_meta = {
-            int(r["host_bucket"]): (int(r["n_items"]), int(r["cap"]))
-            for r in wh.read_uncommitted(spark, "seen_bloom", rnd)
-            .select("host_bucket", "n_items", "cap")
-            .collect()
-        }
-        if table_meta != bloom_meta:
-            raise AssertionError(
-                "bloom_meta planner disagrees with the written sidecar — the "
-                f"seen table holds unexpected duplicate keys? plan={bloom_meta} "
-                f"table={table_meta}"
-            )
-        tm.note("seen+sidecar", time.time() - t0)
-        return table_meta, sel_counts
-
-    from concurrent.futures import ThreadPoolExecutor, wait as _fut_wait
-
     pool = ThreadPoolExecutor(max_workers=1)
-    seen_fut = pool.submit(_seen_and_sidecar)
+    seen_fut = pool.submit(
+        _seen_and_sidecar, spark, wh, rnd, selected, seen_prior, sidecar_prev, prev_meta
+    )
     # the pool tears itself down when the task finishes, so an exception on
     # the main fetch path can never leak the worker thread
     seen_fut.add_done_callback(lambda _: pool.shutdown(wait=False))
 
     # the whole main path joins the overlapped thread on BOTH exits: the
-    # success path consumes its bloom_meta below; a failure here must not
-    # propagate while the sidecar thread still runs Spark jobs (shutdown
+    # success path consumes its bloom_meta in the tail; a failure here must
+    # not propagate while the sidecar thread still runs Spark jobs (shutdown
     # cannot cancel a running task, and a hung write would otherwise block
     # interpreter exit with the round's real error unreported)
     try:
-        # "fetch": ship the SCHEDULE to the DATA — the selected slice is
-        # quota-bounded (politeness) and tiny next to the page corpus, so it
-        # broadcasts against the pages scan and the html bytes NEVER shuffle;
-        # extraction (the only Python crossings, Arrow-batched) then runs
-        # scan-local on the fetched rows only. (At frontier sizes where a round's
-        # schedule outgrew the broadcast budget, dropping the hint falls back to
-        # a bucket-co-located SMJ — same plan shape, still no html re-shuffle
-        # with host_bucket-bucketed storage.)
-        sel_keys = selected.select("url", "seq", "priority", "host", "host_bucket")
-        # coalesce to one task per slot before the extract UDF (same measured
-        # treatment as the link-expansion path): the corpus scan splits at
-        # file/row-group granularity into far more tasks than slots, and every
-        # pandas-UDF task pays a fixed Arrow/worker round-trip; the html rows
-        # stream through each fat task as bounded reader batches, so fewer
-        # tasks costs no memory. Also writes one fetch_log file per slot
-        # (row groups stay 16 MB, so later scans still split below files).
-        # extraction AND link canonicalization run fused in this one Arrow
-        # crossing (udf_extract_text_canon_links): the href strings never
-        # leave Python raw, the canonicalize work rides the parallel fetch
-        # stage instead of its own job on the serial round path, and the
-        # fetch_log's links column durably holds RESOLVED canonical urls
-        # (per-page first-seen dedup; malformed/non-http hrefs dropped).
-        hit = (
-            pages.select("url", "html", "lang")
-            .join(F.broadcast(sel_keys), "url")
-            .coalesce(spark.sparkContext.defaultParallelism)
-            .withColumn(
-                "_ex", udf_extract_text_canon_links(F.col("html"), F.col("url"))
-            )
-            .withColumn("text", F.col("_ex.text"))
-            .withColumn("links", F.col("_ex.links"))
-            .withColumn("status", F.lit("ok"))
-            .drop("html", "_ex")
+        fetched_log = _fetch(spark, wh, rnd, pages, selected)
+        t = _lap(stage_s, "fetch", t)
+        frontier_schema = _expand(
+            spark, wh, cfg, rnd, fetched_log, gated, selected, seen_prior, sidecar_prev
         )
-        # miss = scheduled urls absent from the corpus. A direct
-        # left_anti(sel_keys, pages.url) plans as a sort-merge join that
-        # shuffles EVERY page url (the corpus side) — at 10^10 pages that is
-        # the biggest shuffle in the round, moved for a result bounded by the
-        # quota. Route it through the schedule instead: hit_urls = corpus
-        # urls ∩ schedule (broadcast semi-join on the column-pruned url scan,
-        # map-only, reuses the sel_keys broadcast), then anti-join against
-        # THAT — both sides schedule-bounded, so the anti-join broadcasts at
-        # any corpus size and the pages scan never shuffles.
-        hit_urls = pages.select("url").join(
-            F.broadcast(sel_keys.select("url")), "url", "left_semi"
-        )
-        miss = (
-            sel_keys.join(F.broadcast(hit_urls), "url", "left_anti")
-            .withColumn("lang", F.lit(None).cast("string"))
-            .withColumn("text", F.lit(None).cast("string"))
-            .withColumn("links", F.lit(None).cast("array<string>"))
-            .withColumn("status", F.lit("missing"))
-        )
-        fetched = hit.unionByName(miss, allowMissingColumns=False)
-
-        # The fetch_log WRITE is the round's materialization point: extraction
-        # runs exactly once into the durable table; downstream link expansion
-        # re-reads it COLUMN-PRUNED (url, priority, links — the text bytes stay
-        # on disk). Caching these wide rows on-heap instead measurably collapses
-        # under GC at high parallelism. fetch_log keeps the scan-local layout
-        # (no text shuffle); crawl order is the seq COLUMN, never file order
-        # (SURVEY.md §7.4).
-        fetch_out = fetched.select(
-            "seq", "url", "host", "host_bucket", "status", "text", "lang",
-            "priority", "links",
-        )
-        wh.write("fetch_log", fetch_out, rnd, row_group_bytes=PAGE_ROW_GROUP_BYTES)
-        fetched_log = wh.read_uncommitted(spark, "fetch_log", rnd, fetch_out.schema)
-        tm.lap("fetch+extract+write")
-
-        # expand: the links column already holds canonical urls (fused into
-        # the fetch stage's extract crossing above), so expansion is pure
-        # JVM: column-pruned scan (status, priority, links — the text bytes
-        # stay on disk) → explode → url cols (map-side codegen) → ONE
-        # host_bucket-clustering shuffle that the whole rest of the subtree
-        # rides: the per-url dedup agg groups on (host_bucket, url, …) so
-        # HashPartitioning(host_bucket) already satisfies it, and the
-        # Bloom-probe cogroup in filter_unseen groups on host_bucket too —
-        # neither inserts an exchange of its own. Trade-off (deliberate,
-        # plan-pinned in tests/test_plans.py): with the repartition BELOW the
-        # groupBy, BOTH HashAggregates plan above the exchange, so exploded
-        # per-page duplicate links ride the one shuffle UNCOLLAPSED and are
-        # deduplicated post-shuffle — 1 shuffle of raw exploded links versus
-        # the old url-keyed agg's 4 shuffles of deduped links. On
-        # duplicate-heavy production rounds a hot url's copies all land in
-        # one bucket partition; if that skew ever binds, a map-side
-        # pre-collapse (per-partition dedup on the grouping keys before the
-        # repartition — a mapInPandas/mapPartitions pass, since a DataFrame
-        # partial-distinct cannot be forced without its own shuffle) is the
-        # candidate fix. Benchmark before adopting: the measured r4 A/B that
-        # chose this form compared single-shuffle vs the 4-shuffle url-keyed
-        # agg (12.1 → 10.5 s @8 on the 250k corpus), not vs a pre-collapse,
-        # and the bench corpora (≤4 links/page, few duplicate links) cannot
-        # surface the duplicate-heavy regime where a pre-collapse pays.
-        links = (
-            fetched_log.filter(F.col("status") == "ok")
-            .select(
-                F.explode("links").alias("url"),
-                (F.col("priority") * cfg.priority_decay).alias("child_priority"),
-            )
-        )
-        links = _with_url_cols(links, cfg.num_buckets, cfg.salt_sub_buckets)
-        links = (
-            links.repartition(cfg.num_buckets, "host_bucket")
-            .groupBy("url", "url_hash", "host", "host_bucket", "path")
-            .agg(F.max("child_priority").alias("priority"))
-        )
-
-        # dedup: not fetched this round, not in prior seen (Bloom prefilter +
-        # exact anti-join), not already pending. The sidecar is the committed
-        # per-bucket Bloom TABLE maintained incrementally below — never built
-        # by collecting hashes to the driver. filter_unseen flags the full
-        # link rows in the probe crossing itself (definite misses flow
-        # through a filter; only the Bloom-fpp "maybe" sliver shuffles into
-        # the exact anti-join), so the link pipeline is consumed exactly
-        # once — no checkpoint, no semi-join back.
-        links = filter_unseen(spark, links, seen_prior, sidecar_prev)
-        # remaining = gated minus selected, so selected ∪ remaining == gated
-        # EXACTLY: the "not fetched this round" and "not already pending"
-        # anti-joins fold into ONE anti-join against gated's urls. selected
-        # is quota-bounded (politeness) — broadcast it, like the fetch join's
-        # sel_keys, so the frontier-sized gated rows never shuffle on url for
-        # the remaining split (they still shuffle once into the merge's
-        # host_bucket clustering below).
-        remaining = gated.join(F.broadcast(selected.select("url")), "url", "left_anti")
-        links = links.join(gated.select("url"), "url", "left_anti")
-        new_pending = links.withColumn("discovered_round", F.lit(rnd)).select(
-            "url", "url_hash", "host", "host_bucket", "path", "priority", "discovered_round"
-        )
-
-        # the frontier WRITE is the merge's single materialization (same durable-
-        # table-as-checkpoint pattern as fetch_log); new-link rows are recovered
-        # from the written table by discovered_round — no on-heap caching
-        frontier_next = remaining.select(
-            "url", "url_hash", "host", "host_bucket", "path", "priority", "discovered_round"
-        ).unionByName(new_pending)
-        frontier_next = frontier_next.repartition(cfg.num_buckets, "host_bucket")
-        wh.write("frontier", frontier_next, rnd)
-        tm.lap("expand+frontier_write")
-
-        # per-partition lineage metrics (north rule): per-host_bucket counts
-        # at each stage of this round. candidates = last round's frontier_next
-        # lineage (metadata-scale driver read — the frontier is never
-        # rescanned just to count it); selected = the shared sel_counts job
-        # (also the sidecar planner's n_new — the seen rows ARE the schedule
-        # slice); frontier_next/new_links = ONE hash-agg job whose scan is
-        # column-pruned to two integer columns of the table just written.
-        cand_counts = {
-            int(r["host_bucket"]): int(r["n"])
-            for r in wh.read_rows("metrics", rnd - 1)
-            if r["stage"] == "frontier_next"
-        }
-        frontier_written = wh.read_uncommitted(
-            spark, "frontier", rnd, frontier_next.schema
-        )
-        fn_counts, nl_counts = {}, {}
-        for r in (
-            frontier_written.groupBy("host_bucket")
-            .agg(
-                F.count("*").alias("fn"),
-                F.sum(F.when(F.col("discovered_round") == rnd, 1).otherwise(0))
-                .cast("bigint")
-                .alias("nl"),
-            )
-            .collect()
-        ):
-            fn_counts[int(r["host_bucket"])] = int(r["fn"])
-            if int(r["nl"]) > 0:
-                nl_counts[int(r["host_bucket"])] = int(r["nl"])
-        # join the overlapped seen+sidecar thread (its failure fails the round
-        # BEFORE the commit); it carries the shared sel_counts job plus the
-        # bloom_meta counters that go into the manifest
-        bloom_meta, sel_counts = seen_fut.result()
-        tm.lap("join_seen_sidecar")
-        collected = [
-            {"host_bucket": b, "stage": stage, "n": n}
-            for stage, counts in (
-                ("candidates", cand_counts),
-                ("selected", sel_counts),
-                ("frontier_next", fn_counts),
-                ("new_links", nl_counts),
-            )
-            for b, n in sorted(counts.items())
-        ]
-        wh.write_rows("metrics", rnd, collected, _metrics_schema())
-        totals = {s: 0 for s in ("candidates", "selected", "new_links", "frontier_next")}
-        for r in collected:
-            totals[r["stage"]] += r["n"]
-        n_selected = totals["selected"]
-        tm.lap("metrics_collect")
+        t = _lap(stage_s, "expand", t)
+        bloom_meta, seen_s, totals = _tail(spark, wh, rnd, frontier_schema, seen_fut)
+        _lap(stage_s, "tail", t)
     except BaseException as e:
         seen_fut.cancel()  # no-op once started; prevents a not-yet-started run
         # bounded join: a WEDGED sidecar write must not suppress the round's
@@ -598,6 +628,8 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
             )
         raise
 
+    stage_s["seen"] = round(seen_s, 4)
+    n_selected = totals["selected"]
     wh.commit(
         rnd,
         {
@@ -606,6 +638,7 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
             "new_links": totals["new_links"],
             "frontier_size": totals["frontier_next"],
             "bloom_meta": {str(b): list(v) for b, v in bloom_meta.items()},
+            "stage_s": stage_s,
             **({"exhausted": True} if n_selected == 0 else {}),
         },
     )

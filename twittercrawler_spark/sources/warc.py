@@ -238,7 +238,11 @@ def write_warc(
                     + b"Content-Length: %d\r\n\r\n" % len(body)
                     + body
                 )
-                ts_s = pd.Timestamp(ts).strftime("%Y-%m-%dT%H:%M:%SZ")
+                # whole seconds keep the plain form; a sub-second part is
+                # written out so read_warc gives back the same warc_ts
+                ts = pd.Timestamp(ts)
+                frac = ".%f" if ts.microsecond else ""
+                ts_s = ts.strftime(f"%Y-%m-%dT%H:%M:%S{frac}Z")
                 head = (
                     b"WARC/1.0\r\nWARC-Type: response\r\n"
                     + f"WARC-Record-ID: <urn:uuid:{pid}-{n}>\r\n".encode()
